@@ -1,9 +1,24 @@
-"""Signature spec: tokenization, token/shingle hashes, SimHash64, MinHash.
+"""Signature definitions and their batch kernels: two hash families.
 
-This module is the *single source of truth* for signature semantics. The
-Spark engine (vectorized pandas UDFs in ``functions/udfs.py``) and the DuckDB
-oracle SQL (``__spark_entry__.oracle_sql``) both implement exactly these
-definitions, so the driver's differential check is an end-to-end parity test.
+**spec** — md5 of each shingle STRING. ``token_hash64`` (64-bit) feeds
+SimHash64 over 3-token shingles; ``shingle_hash32`` (32-bit) feeds MinHash and
+the distinct shingle-hash set over k-token shingles. The DuckDB oracles in
+``plans/oracle.py`` recompute exactly these in SQL (``md5(s)`` and
+``hashlib.md5`` agree byte-for-byte on UTF-8), so every oracle-gated query and
+the streaming near-dedup operator use this family. Scalar definitions:
+``simhash64``, ``minhash_sig``, ``shingle_hash32``; batch kernels behind the
+UDFs: ``simhash64_batch`` (``udfs.make_simhash_udf``) and
+``minhash_shingles_batch`` (``udfs.make_minhash_shingles_udf``).
+
+**engine** — md5 once per TOKEN, then a polynomial mix of k token hashes per
+shingle (``_shingle_mix``). String-free and several times faster, but its
+values differ from the spec's, so no oracle recomputes them; it is only used
+where outputs are checked by construction: the flagship pipeline
+(``engine/pipeline.compute_docs``) and containment, whose every candidate is
+verified by exact substring match. One token-hash stage (``_token_hashes``)
+feeds both batch kernels: ``signatures_batch``
+(``udfs.make_fast_signatures_udf``) and ``shingle_sets_batch``
+(``udfs.make_fast_shingles_udf``).
 
 Reference parity notes (capability mapping, not a port):
 - signed 64-bit storage convention mirrors the reference's pHash column
@@ -14,9 +29,6 @@ Reference parity notes (capability mapping, not a port):
 - SimHash64 replaces the image pHash (``/root/reference/scanner/hashFile.py:95-106``)
   per the web-text graft; MinHash replaces dHash as the second fingerprint
   family (``/root/reference/scanner/hashFile.py:115-120``).
-
-All hashes are derived from md5 so that DuckDB (``md5(s)``) and Python
-(``hashlib.md5``) agree byte-for-byte on UTF-8 input.
 """
 
 from __future__ import annotations
@@ -279,6 +291,38 @@ def simhash64_batch(texts, shingle_k: int = SIMHASH_SHINGLE_K) -> np.ndarray:
     return out
 
 
+def minhash_shingles_batch(texts, k_shingle: int, params: MinHashParams):
+    """Spec-family batch kernel: (minhash lists, shingle-hash-set lists).
+
+    Per text, the sorted distinct shingle_hash32 set and the MinHash over it
+    — exactly minhash_sig(text) and sorted({shingle_hash32(s)}); both None
+    for texts with no k-shingle (fewer than k_shingle tokens, None, ''). The
+    md5 per distinct shingle string is memoized across the batch (near-dup
+    clusters repeat shingles heavily).
+    """
+    a = np.array(params.a, dtype=np.int64)[:, None]
+    b = np.array(params.b, dtype=np.int64)[:, None]
+    memo: dict[str, int] = {}
+    out_mh: list[list[int] | None] = []
+    out_sh: list[list[int] | None] = []
+    for text in texts:
+        sh = shingles(tokenize(text), k_shingle) if isinstance(text, str) else []
+        if not sh:
+            out_mh.append(None)
+            out_sh.append(None)
+            continue
+        vals = set()
+        for s in sh:
+            h = memo.get(s)
+            if h is None:
+                h = memo[s] = shingle_hash32(s)
+            vals.add(h)
+        hs = np.array(sorted(vals), dtype=np.int64)
+        out_mh.append(((a * hs[None, :] + b) % MINHASH_PRIME).min(axis=1).tolist())
+        out_sh.append(hs.tolist())
+    return out_mh, out_sh
+
+
 # ---------------------------------------------------------------------------
 # Fast engine kernel (the pipeline's scale path)
 #
@@ -358,6 +402,46 @@ def winnow_split(seq: np.ndarray, w: int) -> tuple[np.ndarray, np.ndarray]:
     return interior, boundary
 
 
+def _token_hashes(texts) -> tuple[np.ndarray, np.ndarray]:
+    """Engine token-hash stage: (offsets, uint64 token hashes) for a batch;
+    doc i's hashes are th[offs[i]:offs[i + 1]] (None / '' docs: empty).
+
+    Tokenize every doc, factorize the flat token stream (one C-side hash
+    pass), md5 each DISTINCT token exactly once, then gather per-doc hash
+    arrays by offset. md5 stays the hash, so this is bit-identical to hashing
+    each token in a loop — it just drops the per-token Python dict work and
+    bounds md5 calls at the batch's distinct-token count (Zipfian web text:
+    ~2-6% of the token stream; measured in tools/token_dup_stats.py).
+    """
+    import pandas as pd  # local: keep module import pyspark/pandas-free
+
+    tok_lists = [tokenize(t) if isinstance(t, str) else [] for t in texts]
+    lens = np.fromiter((len(t) for t in tok_lists), dtype=np.int64,
+                       count=len(tok_lists))
+    offs = np.zeros(len(tok_lists) + 1, dtype=np.int64)
+    np.cumsum(lens, out=offs[1:])
+    if not offs[-1]:
+        return offs, np.empty(0, dtype=np.uint64)
+    flat = np.array([t for toks in tok_lists for t in toks], dtype=object)
+    codes, uniq = pd.factorize(flat)
+    hv = np.fromiter(
+        (
+            int.from_bytes(hashlib.md5(u.encode("utf-8")).digest()[:8], "big")
+            for u in uniq
+        ),
+        dtype=np.uint64,
+        count=len(uniq),
+    )
+    return offs, hv[codes]
+
+
+def _shingle_h32(th: np.ndarray, k: int) -> np.ndarray:
+    """Positional engine shingle hashes in the 32-bit domain (top bits of the
+    mix), which keeps a*h+b inside int64 for the universal-hash MinHash
+    family, same as shingle_hash32; caller guarantees len(th) >= k."""
+    return (_shingle_mix(th, k) >> np.uint64(32)).astype(np.int64)
+
+
 def signatures_batch(
     texts,
     k_shingle: int,
@@ -373,8 +457,6 @@ def signatures_batch(
     With winnow_w set, returns two extra lists (win_interior, win_boundary):
     the winnow_split of each doc's positional shingle-hash sequence, the
     slim anchor universe for the containment leg (see winnow_split)."""
-    import pandas as pd  # local: keep module import pyspark/pandas-free
-
     a = np.array(params.a, dtype=np.int64)[:, None]
     b = np.array(params.b, dtype=np.int64)[:, None]
     bit_idx = np.arange(64, dtype=np.uint64)[None, :]
@@ -384,38 +466,10 @@ def signatures_batch(
     out_sh: list[list[int] | None] = []
     out_wint: list[list[int] | None] = []
     out_wbnd: list[list[int] | None] = []
-    # Batch token-hash kernel: tokenize every doc, factorize the flat token
-    # stream (one C-side hash pass), md5 each DISTINCT token exactly once,
-    # then gather per-doc hash arrays by offset. md5 stays the hash (the
-    # DuckDB oracle recomputes it), so this is bit-identical to hashing each
-    # token in a loop — it just drops the per-token Python dict work and
-    # bounds md5 calls at the batch's distinct-token count (Zipfian web text:
-    # ~2-6% of the token stream; measured in tools/token_dup_stats.py).
-    tok_lists = [tokenize(t) if isinstance(t, str) else [] for t in texts]
-    lens = np.fromiter((len(t) for t in tok_lists), dtype=np.int64,
-                       count=len(tok_lists))
-    offs = np.zeros(len(tok_lists) + 1, dtype=np.int64)
-    np.cumsum(lens, out=offs[1:])
-    if offs[-1]:
-        flat = np.array(
-            [t for toks in tok_lists for t in toks], dtype=object
-        )
-        codes, uniq = pd.factorize(flat)
-        hv = np.fromiter(
-            (
-                int.from_bytes(hashlib.md5(u.encode("utf-8")).digest()[:8], "big")
-                for u in uniq
-            ),
-            dtype=np.uint64,
-            count=len(uniq),
-        )
-        all_th = hv[codes]
-    else:
-        all_th = np.empty(0, dtype=np.uint64)
-    for i, text in enumerate(texts):
-        toks = tok_lists[i]
-        n = len(toks)
+    offs, all_th = _token_hashes(texts)
+    for i in range(len(texts)):
         th = all_th[offs[i]:offs[i + 1]]
+        n = len(th)
         if n >= shingle_k_sim:
             feats = _shingle_mix(th, shingle_k_sim)
             uniq, counts = np.unique(feats, return_counts=True)
@@ -427,9 +481,7 @@ def signatures_batch(
                 u -= 1 << 63
             out_sim[i] = u
         if n >= k_shingle:
-            # 32-bit domain (top bits of the mix) keeps a*h+b inside int64
-            # for the universal-hash MinHash family, same as shingle_hash32
-            h32 = (_shingle_mix(th, k_shingle) >> np.uint64(32)).astype(np.int64)
+            h32 = _shingle_h32(th, k_shingle)
             uniq = np.unique(h32)
             vals = (a * uniq[None, :] + b) % MINHASH_PRIME
             out_mh.append(vals.min(axis=1).tolist())
@@ -449,26 +501,28 @@ def signatures_batch(
     return out_sim, out_mh, out_sh
 
 
-def shingle_hash_set(
-    text, k_shingle: int, memo: dict[str, int] | None = None
-) -> np.ndarray | None:
-    """Sorted distinct shingle_hash32 values of a text; None if no shingles.
-
-    Shared kernel for the MinHash + shingle-set signature pass (both consume
-    exactly this set; computing it once halves the tokenize/md5 work).
-    """
-    toks = tokenize(text) if isinstance(text, str) else []
-    sh = shingles(toks, k_shingle)
-    if not sh:
-        return None
-    if memo is None:
-        vals = {shingle_hash32(s) for s in sh}
-    else:
-        vals = set()
-        for s in sh:
-            h = memo.get(s)
-            if h is None:
-                h = shingle_hash32(s)
-                memo[s] = h
-            vals.add(h)
-    return np.array(sorted(vals), dtype=np.int64)
+def shingle_sets_batch(texts, k_shingle: int, winnow_w: int | None = None):
+    """Engine distinct shingle-hash sets alone: (shingle-hash-set lists,) or,
+    with winnow_w, (sets, win_interior, win_boundary) — the same values as
+    the matching signatures_batch outputs, without its SimHash and MinHash
+    work (the standalone containment path). None below k_shingle tokens."""
+    out_sh: list[list[int] | None] = []
+    out_wint: list[list[int] | None] = []
+    out_wbnd: list[list[int] | None] = []
+    offs, all_th = _token_hashes(texts)
+    for i in range(len(texts)):
+        th = all_th[offs[i]:offs[i + 1]]
+        if len(th) < k_shingle:
+            out_sh.append(None)
+            out_wint.append(None)
+            out_wbnd.append(None)
+            continue
+        h32 = _shingle_h32(th, k_shingle)
+        out_sh.append(np.unique(h32).tolist())
+        if winnow_w is not None:
+            wi, wb = winnow_split(h32, winnow_w)
+            out_wint.append(wi.tolist())
+            out_wbnd.append(wb.tolist())
+    if winnow_w is not None:
+        return out_sh, out_wint, out_wbnd
+    return (out_sh,)

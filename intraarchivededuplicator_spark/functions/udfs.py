@@ -3,35 +3,49 @@
 The reference computes MD5 + pHash per item in worker processes
 (/root/reference/scanner/hashFile.py:135-164); here the same surface is one
 Arrow-batched pass per partition — no per-row Python, per BASELINE input_hint.
+
+Four thin wrappers over the batch kernels of functions/hashing, two per hash
+family (see that module's docstring):
+- spec (md5 of each shingle string; what the DuckDB oracles recompute):
+  make_simhash_udf, make_minhash_shingles_udf;
+- engine (md5 per token + polynomial shingle mix; pipeline and containment):
+  make_fast_signatures_udf, make_fast_shingles_udf.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StringType
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from .hashing import (
-    MINHASH_PRIME,
+    SIMHASH_SHINGLE_K,
     MinHashParams,
-    shingle_hash32,
-    shingle_hash_set,
-    shingles,
+    minhash_shingles_batch,
+    shingle_sets_batch,
+    signatures_batch,
     simhash64_batch,
-    tokenize,
 )
 
-
-@F.pandas_udf(LongType())
-def simhash64_udf(texts: pd.Series) -> pd.Series:
-    return pd.Series(simhash64_batch(texts.tolist()))
+_LONGS = ArrayType(LongType())
+_WINNOW_FIELDS = [("win_interior", _LONGS), ("win_boundary", _LONGS)]
 
 
-def make_simhash_udf(shingle_k: int):
-    """simhash64 pandas UDF with a non-default shingle width."""
+def _struct_udf(fields: list, batch):
+    """pandas UDF text -> struct(fields), whose values are the lists (in
+    field order) that batch(texts) returns for one Arrow batch."""
+    names = [name for name, _ in fields]
+    schema = StructType([StructField(name, t) for name, t in fields])
+
+    @F.pandas_udf(schema)
+    def _udf(texts: pd.Series) -> pd.DataFrame:
+        return pd.DataFrame(dict(zip(names, batch(texts.tolist()))))
+
+    return _udf
+
+
+def make_simhash_udf(shingle_k: int = SIMHASH_SHINGLE_K):
+    """spec: text -> simhash64 long (0 below shingle_k tokens)."""
 
     @F.pandas_udf(LongType())
     def _udf(texts: pd.Series) -> pd.Series:
@@ -40,227 +54,52 @@ def make_simhash_udf(shingle_k: int):
     return _udf
 
 
-@F.pandas_udf(StringType())
-def md5_hex_udf(texts: pd.Series) -> pd.Series:
-    """Python-side md5 (matches F.md5(encode(.,'UTF-8')); kept for parity tests)."""
-    return texts.map(lambda t: hashlib.md5((t or "").encode("utf-8")).hexdigest())
+def make_minhash_shingles_udf(k_shingle: int, params: MinHashParams):
+    """spec: text -> struct(minhash array<long>, shingle_hashes array<long>).
 
-
-def make_minhash_udf(k_shingle: int, params: MinHashParams):
-    """Returns a pandas UDF text -> array<long> MinHash signature (null if no shingles)."""
-    a = np.array(params.a, dtype=np.int64)[:, None]
-    b = np.array(params.b, dtype=np.int64)[:, None]
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def minhash_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        memo: dict[str, int] = {}
-        for text in texts:
-            toks = tokenize(text) if isinstance(text, str) else []
-            sh = shingles(toks, k_shingle)
-            if not sh:
-                out.append(None)
-                continue
-            uniq = set(sh)
-            hs = np.empty(len(uniq), dtype=np.int64)
-            for i, s in enumerate(uniq):
-                h = memo.get(s)
-                if h is None:
-                    h = shingle_hash32(s)
-                    memo[s] = h
-                hs[i] = h
-            vals = (a * hs[None, :] + b) % MINHASH_PRIME
-            out.append(vals.min(axis=1).tolist())
-        return pd.Series(out)
-
-    return minhash_udf
-
-
-def make_shingle_hashes_udf(k_shingle: int):
-    """text -> array<long> of DISTINCT shingle_hash32 values (null if none).
-
-    The engine's shingle-set representation, computed once per doc in the
-    signature pass and carried in the docs table so Jaccard verification and
-    containment anchors never recompute it. Python + md5 with per-batch
-    memoization beats Spark's interpreted higher-order array functions
-    (transform/aggregate/slice) by ~10x here.
-    """
-
-    @F.pandas_udf(ArrayType(LongType()))
-    def shingle_hashes_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        memo: dict[str, int] = {}
-        for text in texts:
-            toks = tokenize(text) if isinstance(text, str) else []
-            sh = shingles(toks, k_shingle)
-            if not sh:
-                out.append(None)
-                continue
-            vals = set()
-            for s in sh:
-                h = memo.get(s)
-                if h is None:
-                    h = shingle_hash32(s)
-                    memo[s] = h
-                vals.add(h)
-            out.append(sorted(vals))
-        return pd.Series(out)
-
-    return shingle_hashes_udf
+    MinHash and the sorted distinct shingle_hash32 set derive from the same
+    tokenize -> k-shingle -> md5-32 work, so one Arrow pass yields both;
+    queries that need only one project its field. Both fields are null for
+    texts with no k-shingle."""
+    return _struct_udf(
+        [("minhash", _LONGS), ("shingle_hashes", _LONGS)],
+        lambda texts: minhash_shingles_batch(texts, k_shingle, params),
+    )
 
 
 def make_fast_signatures_udf(
     k_shingle: int, params: MinHashParams, winnow_w: int | None = None
 ):
-    """text -> struct(simhash long, minhash array<long>, shingle_hashes
-    array<long>[, win_interior array<long>, win_boundary array<long>]) via
-    the string-free vectorized kernel (hashing.signatures_batch) — the
-    pipeline's scale path. One Arrow transfer of the text, one tokenize,
-    numpy everywhere else. winnow_w adds the containment anchor universe
-    (hashing.winnow_split) computed from the same shingle-hash sequence.
+    """engine: text -> struct(simhash long, minhash array<long>,
+    shingle_hashes array<long>[, win_interior array<long>, win_boundary
+    array<long>]) via the string-free vectorized kernel
+    (hashing.signatures_batch) — the pipeline's scale path. One Arrow
+    transfer of the text, one tokenize, numpy everywhere else. winnow_w adds
+    the containment anchor universe (hashing.winnow_split) computed from the
+    same shingle-hash sequence.
     """
-    from pyspark.sql.types import StructField, StructType
-
-    from .hashing import signatures_batch
-
     fields = [
-        StructField("simhash", LongType()),
-        StructField("minhash", ArrayType(LongType())),
-        StructField("shingle_hashes", ArrayType(LongType())),
+        ("simhash", LongType()),
+        ("minhash", _LONGS),
+        ("shingle_hashes", _LONGS),
     ]
     if winnow_w is not None:
-        fields += [
-            StructField("win_interior", ArrayType(LongType())),
-            StructField("win_boundary", ArrayType(LongType())),
-        ]
-    schema = StructType(fields)
-
-    @F.pandas_udf(schema)
-    def fast_sig_udf(texts: pd.Series) -> pd.DataFrame:
-        if winnow_w is not None:
-            sim, mh, sh, wi, wb = signatures_batch(
-                texts.tolist(), k_shingle, params, winnow_w=winnow_w
-            )
-            return pd.DataFrame(
-                {
-                    "simhash": sim,
-                    "minhash": mh,
-                    "shingle_hashes": sh,
-                    "win_interior": wi,
-                    "win_boundary": wb,
-                }
-            )
-        sim, mh, sh = signatures_batch(texts.tolist(), k_shingle, params)
-        return pd.DataFrame(
-            {"simhash": sim, "minhash": mh, "shingle_hashes": sh}
-        )
-
-    return fast_sig_udf
-
-
-def make_minhash_shingles_udf(k_shingle: int, params: MinHashParams):
-    """text -> struct(minhash array<long>, shingle_hashes array<long>).
-
-    Fused signature pass: MinHash and the distinct-shingle-hash set both
-    derive from the same tokenize -> k-shingle -> md5-32 work, so computing
-    them in one Arrow batch halves that work versus separate UDFs. Output
-    fields match make_minhash_udf / make_shingle_hashes_udf exactly.
-    """
-    from pyspark.sql.types import StructField, StructType
-
-    a = np.array(params.a, dtype=np.int64)[:, None]
-    b = np.array(params.b, dtype=np.int64)[:, None]
-    schema = StructType(
-        [
-            StructField("minhash", ArrayType(LongType())),
-            StructField("shingle_hashes", ArrayType(LongType())),
-        ]
+        fields += _WINNOW_FIELDS
+    return _struct_udf(
+        fields,
+        lambda texts: signatures_batch(texts, k_shingle, params, winnow_w=winnow_w),
     )
 
-    @F.pandas_udf(schema)
-    def sig_udf(texts: pd.Series) -> pd.DataFrame:
-        mh_out, sh_out = [], []
-        memo: dict[str, int] = {}
-        for text in texts:
-            hs = shingle_hash_set(text, k_shingle, memo)
-            if hs is None:
-                mh_out.append(None)
-                sh_out.append(None)
-                continue
-            vals = (a * hs[None, :] + b) % MINHASH_PRIME
-            mh_out.append(vals.min(axis=1).tolist())
-            sh_out.append(hs.tolist())
-        return pd.DataFrame({"minhash": mh_out, "shingle_hashes": sh_out})
 
-    return sig_udf
-
-
-def make_winnow_shingles_udf(k_shingle: int, winnow_w: int):
-    """text -> struct(shingle_hashes array<long>, win_interior array<long>,
-    win_boundary array<long>): the full distinct shingle-hash set plus its
-    winnow_split (hashing), all from ONE tokenize + hash pass — the
-    standalone-containment twin of make_fast_signatures_udf(winnow_w=...)."""
-    from pyspark.sql.types import StructField, StructType
-
-    from .hashing import _shingle_mix, tokenize, winnow_split
-
-    schema = StructType(
-        [
-            StructField("shingle_hashes", ArrayType(LongType())),
-            StructField("win_interior", ArrayType(LongType())),
-            StructField("win_boundary", ArrayType(LongType())),
-        ]
+def make_fast_shingles_udf(k_shingle: int, winnow_w: int | None = None):
+    """engine: text -> struct(shingle_hashes array<long>[, win_interior
+    array<long>, win_boundary array<long>]) via hashing.shingle_sets_batch —
+    the same values as make_fast_signatures_udf's fields of those names,
+    without the SimHash/MinHash work: containment's standalone shingle sets
+    (and, with winnow_w, their winnow_split)."""
+    fields = [("shingle_hashes", _LONGS)]
+    if winnow_w is not None:
+        fields += _WINNOW_FIELDS
+    return _struct_udf(
+        fields, lambda texts: shingle_sets_batch(texts, k_shingle, winnow_w)
     )
-
-    @F.pandas_udf(schema)
-    def winnow_udf(texts: pd.Series) -> pd.DataFrame:
-        sh_out, wi_out, wb_out = [], [], []
-        tok_memo: dict[str, int] = {}
-        for text in texts:
-            toks = tokenize(text) if isinstance(text, str) else []
-            if len(toks) < k_shingle:
-                sh_out.append(None)
-                wi_out.append(None)
-                wb_out.append(None)
-                continue
-            th = np.empty(len(toks), dtype=np.uint64)
-            for j, t in enumerate(toks):
-                h = tok_memo.get(t)
-                if h is None:
-                    h = int.from_bytes(
-                        hashlib.md5(t.encode("utf-8")).digest()[:8], "big"
-                    )
-                    tok_memo[t] = h
-                th[j] = h
-            seq = (_shingle_mix(th, k_shingle) >> np.uint64(32)).astype(np.int64)
-            wi, wb = winnow_split(seq, winnow_w)
-            sh_out.append(np.unique(seq).tolist())
-            wi_out.append(wi.tolist())
-            wb_out.append(wb.tolist())
-        return pd.DataFrame(
-            {
-                "shingle_hashes": sh_out,
-                "win_interior": wi_out,
-                "win_boundary": wb_out,
-            }
-        )
-
-    return winnow_udf
-
-
-def make_min_shingle_udf(k_shingle: int):
-    """text -> smallest shingle_hash32 over its k-shingles (null if none).
-
-    Rolling-hash document fingerprint (winnowing-style anchor); also the
-    anchor used by the containment candidate generator.
-    """
-
-    @F.pandas_udf(LongType())
-    def min_shingle_udf(texts: pd.Series) -> pd.Series:
-        out = []
-        for text in texts:
-            sh = shingles(tokenize(text) if isinstance(text, str) else [], k_shingle)
-            out.append(min(shingle_hash32(s) for s in sh) if sh else None)
-        return pd.Series(out, dtype="object")
-
-    return min_shingle_udf

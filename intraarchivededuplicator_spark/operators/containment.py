@@ -26,24 +26,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..functions.columns import token_shingles, tokens
-from ..functions.hashing import MINHASH_PRIME  # noqa: F401  (doc cross-ref)
-
-
-def _shingle_hashes32(text_col: str, k: int) -> F.Column:
-    """Distinct shingle_hash32 values, JVM-side: md5 -> first 8 hex -> conv.
-
-    Kept only for oracle-parity queries (plans/queries.q_doc_fingerprint);
-    the engine path uses columns.shingle_hashes64 (xxhash64, ~20x cheaper)."""
-    sh = token_shingles(tokens(F.col(text_col)), k)
-    return F.array_distinct(
-        F.transform(
-            sh,
-            lambda s: F.conv(
-                F.substring(F.md5(F.encode(s, "UTF-8")), 1, 8), 16, 10
-            ).cast("long"),
-        )
-    )
+from ..functions.columns import tokens
 
 
 def containment_pairs(
@@ -63,7 +46,8 @@ def containment_pairs(
 
     Pass shingle_col when the docs table already carries the shingle-hash set
     (engine/pipeline computes it once in the signature pass) — anchors and the
-    outer explode then reuse it with zero recomputation.
+    outer explode then reuse it with zero recomputation. Otherwise it is
+    computed here with the engine hash family (udfs.make_fast_shingles_udf).
 
     Candidate plan (ids only — no text leaves its partition until the final
     verify): min-anchor equi-join -> shingle-subset filter (containment
@@ -134,27 +118,26 @@ def containment_pairs(
     computed here from the text.
     """
     winnowing = winnow_interior_col is not None or winnow_w is not None
-    if winnowing and winnow_interior_col is None:
-        # compute full set + winnow split in ONE kernel pass over the text
-        from ..functions.udfs import make_winnow_shingles_udf
+    compute_winnow = winnowing and winnow_interior_col is None
+    if compute_winnow or shingle_col is None:
+        # full set (+ winnow split) in ONE engine-family kernel pass over the
+        # text; containment never reads the spec family, whose hash values
+        # differ — the exact verify below makes the result family-independent
+        from ..functions.udfs import make_fast_shingles_udf
 
-        sig = make_winnow_shingles_udf(k_shingle, winnow_w)(F.col(text_col))
-        docs = (
-            docs.withColumn("_wsig", sig)
-            .withColumn("_sh", F.col("_wsig.shingle_hashes"))
-            .withColumn("_wint", F.col("_wsig.win_interior"))
-            .withColumn("_wbnd", F.col("_wsig.win_boundary"))
-            .drop("_wsig")
+        sig = make_fast_shingles_udf(
+            k_shingle, winnow_w if compute_winnow else None
+        )(F.col(text_col))
+        docs = docs.withColumn("_ssig", sig).withColumn(
+            "_sh", F.col("_ssig.shingle_hashes")
         )
         shingle_col = "_sh"
-        winnow_interior_col, winnow_boundary_col = "_wint", "_wbnd"
-    elif shingle_col is None:
-        from ..functions.udfs import make_shingle_hashes_udf
-
-        docs = docs.withColumn(
-            "_sh", make_shingle_hashes_udf(k_shingle)(F.col(text_col))
-        )
-        shingle_col = "_sh"
+        if compute_winnow:
+            docs = docs.withColumn("_wint", F.col("_ssig.win_interior")).withColumn(
+                "_wbnd", F.col("_ssig.win_boundary")
+            )
+            winnow_interior_col, winnow_boundary_col = "_wint", "_wbnd"
+        docs = docs.drop("_ssig")
     # one fragment shingle per end at most (see docstring) — NOT k-dependent
     slack = 2
     base = docs.filter(F.col(shingle_col).isNotNull()).select(

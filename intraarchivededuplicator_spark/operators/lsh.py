@@ -37,10 +37,15 @@ def minhash_candidate_pairs(
     id_col: str = "id",
     sig_col: str = "minhash",
     n_bands: int = 32,
-    rows_per_band: int | None = None,
+    *,
+    rows_per_band: int,
     hot_threshold: int | None = None,
 ) -> DataFrame:
     """Canonical candidate pairs (id_lo, id_hi, n_shared_bands).
+
+    rows_per_band is required: the band geometry must match the signature
+    length the caller computed (n_bands * rows_per_band <= len(minhash)),
+    which this operator cannot infer at plan time.
 
     Null signatures (no shingles — degenerate docs) are excluded, mirroring
     the pHash IS NOT NULL gate (/root/reference/dbApi.py:395-404).
@@ -65,10 +70,6 @@ def minhash_candidate_pairs(
     streaming shuffle-hash self-join over one reused exchange.
     """
     src = df.filter(F.col(sig_col).isNotNull())
-    if rows_per_band is None:
-        # infer from the first row at plan time is not possible; require caller
-        # config — default derived from common 128-sig
-        rows_per_band = 4
     bands = src.select(
         F.col(id_col).alias("_id"),
         F.explode(minhash_band_keys(sig_col, n_bands, rows_per_band)).alias(

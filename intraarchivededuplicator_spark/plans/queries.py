@@ -10,6 +10,7 @@ engine's public operator surface exercised on the shared tables — the
 from __future__ import annotations
 
 import hashlib
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.window import Window
@@ -25,7 +26,7 @@ from ..functions.columns import (
     tokens,
 )
 from ..functions.hashing import MinHashParams
-from ..functions.udfs import make_min_shingle_udf, make_minhash_udf, simhash64_udf
+from ..functions.udfs import make_minhash_shingles_udf, make_simhash_udf
 from ..operators.banded_join import banded_radius_search, banded_self_join
 from ..operators.cluster import assign_clusters
 from ..operators.containment import containment_pairs
@@ -59,8 +60,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def docs_with_sig(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "documents").select(
-        "doc_id", "text", "lang", simhash64_udf(F.col("text")).alias("simhash")
+        "doc_id", "text", "lang", make_simhash_udf()(F.col("text")).alias("simhash")
     )
+
+
+def _spec_sig() -> F.Column:
+    """struct(minhash, shingle_hashes) of the `text` column under the gated
+    spec config (K_SHINGLE shingles, ORACLE_MINHASH): one Arrow pass yields
+    both; queries project the field(s) they need."""
+    return make_minhash_shingles_udf(K_SHINGLE, ORACLE_MINHASH)(F.col("text"))
 
 
 # --- exact family (J1/J3) ---------------------------------------------------
@@ -372,10 +380,24 @@ def q_match_count_histogram(spark, sf_dir):
 
 # --- MinHash family (H3/LSH) -------------------------------------------------
 
+def _spec_sig_docs(spark, sf_dir) -> DataFrame:
+    """(doc_id, minhash, shset) of every document, persisted: the input of
+    the sketch-vs-exact audits, which read both fields of one spec pass."""
+    return (
+        load(spark, sf_dir, "documents")
+        .select("doc_id", _spec_sig().alias("_sig"))
+        .select(
+            "doc_id",
+            F.col("_sig.minhash").alias("minhash"),
+            F.col("_sig.shingle_hashes").alias("shset"),
+        )
+        .persist(StorageLevel.MEMORY_AND_DISK)
+    )
+
+
 def q_minhash_signatures_long(spark, sf_dir):
-    mh = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
     d = load(spark, sf_dir, "documents").select(
-        "doc_id", mh(F.col("text")).alias("sig")
+        "doc_id", _spec_sig().getField("minhash").alias("sig")
     ).filter(F.col("sig").isNotNull())
     return d.select(
         "doc_id", F.posexplode("sig").alias("i", "v")
@@ -383,9 +405,8 @@ def q_minhash_signatures_long(spark, sf_dir):
 
 
 def q_minhash_band_pairs(spark, sf_dir):
-    mh = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
     d = load(spark, sf_dir, "documents").select(
-        "doc_id", mh(F.col("text")).alias("minhash")
+        "doc_id", _spec_sig().getField("minhash").alias("minhash")
     )
     return minhash_candidate_pairs(
         d, "doc_id", "minhash", n_bands=4, rows_per_band=4
@@ -406,20 +427,8 @@ def q_minhash_jaccard_estimate(spark, sf_dir):
     the pair ids, the ann_topk discipline). est denominator 16 = 2^4, so
     round6 of the estimate is exact in both engines; the exact Jaccard
     divides the same integers in both."""
-    from ..functions.udfs import make_minhash_udf, make_shingle_hashes_udf
-
     n_perm = len(ORACLE_MINHASH.a)
-    mh = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
-    shu = make_shingle_hashes_udf(K_SHINGLE)
-    d = (
-        load(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            mh(F.col("text")).alias("minhash"),
-            shu(F.col("text")).alias("shset"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    d = _spec_sig_docs(spark, sf_dir)
     cand = minhash_candidate_pairs(
         d, "doc_id", "minhash", n_bands=4, rows_per_band=4
     ).select("id_lo", "id_hi")
@@ -479,20 +488,9 @@ def q_minhash_recall_audit(spark, sf_dir):
     Boundary discipline: the truth filter is expressed as 2*i >= u in BOTH
     engines (for i,u << 2^52 this is exactly the FP j >= 0.5 the operator
     applies, made explicit)."""
-    from ..functions.udfs import make_minhash_udf, make_shingle_hashes_udf
     from ..operators.setsim import jaccard_self_join
 
-    mh = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
-    shu = make_shingle_hashes_udf(K_SHINGLE)
-    d = (
-        load(spark, sf_dir, "documents")
-        .select(
-            "doc_id",
-            mh(F.col("text")).alias("minhash"),
-            shu(F.col("text")).alias("shset"),
-        )
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    d = _spec_sig_docs(spark, sf_dir)
     exact = jaccard_self_join(
         d.filter(F.col("shset").isNotNull()).select("doc_id", "shset"),
         "doc_id",
@@ -552,9 +550,8 @@ def q_minhash_dedup_clusters(spark, sf_dir):
     alternating-star loop) -> one shuffle-hash join back to the corpus ids.
     Identical shape to q_simhash_clusters; only the edge generator differs.
     """
-    mh = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
     d = load(spark, sf_dir, "documents").select(
-        "doc_id", mh(F.col("text")).alias("minhash")
+        "doc_id", _spec_sig().getField("minhash").alias("minhash")
     )
     pairs = minhash_candidate_pairs(
         d, "doc_id", "minhash", n_bands=4, rows_per_band=4
@@ -591,12 +588,14 @@ def q_containment_pairs(spark, sf_dir):
     # MEMORY_AND_DISK keeps it spill-safe at scale. Lifecycle: driver-gate
     # queries are single-action (evaluate once, session ends or LRU evicts);
     # a long-lived caller embedding this should unpersist after consuming.
-    from ..functions.udfs import make_shingle_hashes_udf
+    from ..functions.udfs import make_fast_shingles_udf
 
     d = load(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("id"),
         "text",
-        make_shingle_hashes_udf(K_SHINGLE)(F.col("text")).alias("_sh"),
+        make_fast_shingles_udf(K_SHINGLE)(F.col("text"))
+        .getField("shingle_hashes")
+        .alias("_sh"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     return containment_pairs(
         d, "id", "text", K_SHINGLE, shingle_col="_sh"
@@ -612,9 +611,9 @@ def q_containment_pairs_winnowed(spark, sf_dir):
     one interior window for every doc — identical result set, ~half the
     df/anchor exchange. (The flagship web-page pipeline uses w=8 for the
     full ~4.5x cut; see DedupConfig.containment_winnow_w.)"""
-    from ..functions.udfs import make_winnow_shingles_udf
+    from ..functions.udfs import make_fast_shingles_udf
 
-    sig = make_winnow_shingles_udf(K_SHINGLE, 3)(F.col("text"))
+    sig = make_fast_shingles_udf(K_SHINGLE, 3)(F.col("text"))
     d = (
         load(spark, sf_dir, "documents")
         .select(F.col("doc_id").alias("id"), "text", sig.alias("_wsig"))
@@ -933,19 +932,18 @@ def q_langid_confusion(spark, sf_dir):
 
 
 def q_doc_fingerprint(spark, sf_dir):
-    """Winnowing-style fingerprint: min shingle hash + distinct-shingle count."""
-    from ..operators.containment import _shingle_hashes32
-
-    d = load(spark, sf_dir, "documents")
-    min_sh = make_min_shingle_udf(K_SHINGLE)
-    sh = _shingle_hashes32("text", K_SHINGLE)
+    """Winnowing-style fingerprint: min shingle hash + distinct-shingle count
+    (docs with no shingle drop out)."""
+    sh = _spec_sig().getField("shingle_hashes")
     return (
-        d.select(
+        load(spark, sf_dir, "documents")
+        .select("doc_id", sh.alias("_sh"))
+        .filter(F.col("_sh").isNotNull())
+        .select(
             "doc_id",
-            min_sh(F.col("text")).alias("min_shingle"),
-            F.size(sh).cast("long").alias("n_distinct_shingles"),
+            F.array_min("_sh").alias("min_shingle"),
+            F.size("_sh").cast("long").alias("n_distinct_shingles"),
         )
-        .filter(F.col("min_shingle").isNotNull())
     )
 
 
@@ -2341,7 +2339,7 @@ def _report_docs_and_pairs(spark, sf_dir, radius: int = SEARCH_RADIUS):
         F.col("doc_id").alias("id"),
         F.col("source").alias("site"),
         F.size(tokens(F.col("text"))).cast("long").alias("n_tokens"),
-        simhash64_udf(F.col("text")).alias("simhash"),
+        make_simhash_udf()(F.col("text")).alias("simhash"),
     )
     pairs = banded_self_join(
         docs, "id", "simhash", radius, blacklist=(0,)
@@ -3070,8 +3068,6 @@ def q_stream_near_dedup_replay(spark, sf_dir):
     q_near_pairs_within_horizon, so the SAME DuckDB oracle applies — the
     stream/batch equivalence tests/test_streaming_near_dedup.py pins is now
     also driver-hash-checked."""
-    import tempfile
-
     from ..streaming.ingest_stream import PAGES_SCHEMA
     from ..streaming.near_dedup_stream import stream_simhash_near_pairs
 
@@ -3090,47 +3086,66 @@ def q_stream_near_dedup_replay(spark, sf_dir):
         "text",
         F.col("lang"),
     )
-    landing = tempfile.mkdtemp(prefix="snd_land_")
-    out_dir = tempfile.mkdtemp(prefix="snd_out_")
-    ckpt = tempfile.mkdtemp(prefix="snd_ckpt_")
-    pages.write.mode("overwrite").parquet(landing)
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(landing)
-    q = (
-        stream_simhash_near_pairs(
-            stream,
-            radius=SIMHASH_RADIUS,
-            watermark="48 hours",
-            horizon=f"{NEAR_HORIZON_SEC} seconds",
-            extract=False,
+    with _replay_dirs("snd") as (landing, out_dir, ckpt):
+        pages.write.mode("overwrite").parquet(landing)
+        stream = spark.readStream.schema(PAGES_SCHEMA).parquet(landing)
+        q = (
+            stream_simhash_near_pairs(
+                stream,
+                radius=SIMHASH_RADIUS,
+                watermark="48 hours",
+                horizon=f"{NEAR_HORIZON_SEC} seconds",
+                extract=False,
+            )
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
         )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _drain_replay_sink(spark, out_dir, (landing, out_dir, ckpt))
+        q.awaitTermination()
+        return _drain_replay_sink(spark, out_dir)
 
 
-def _drain_replay_sink(spark, out_dir, tmp_dirs):
-    """Materialize a replay sink (bounded: the gated pair set) and delete
-    the scratch dirs — the sink, landing copy, and checkpoint would
-    otherwise leak a corpus-sized parquet per invocation across the
-    repeated gate/bench sweeps."""
+@contextmanager
+def _replay_dirs(prefix: str):
+    """(landing, out_dir, ckpt) scratch dirs of a streaming replay, deleted
+    on exit whether the replay returns or raises — the sink, landing copy,
+    and checkpoint would otherwise leak a corpus-sized parquet per
+    invocation across the repeated gate/bench sweeps. The replay must
+    materialize its result (_collect_local) inside the block."""
     import shutil
+    import tempfile
 
-    rows = spark.read.parquet(out_dir).select(
-        F.col("url_lo").cast("long").alias("id_lo"),
-        F.col("url_hi").cast("long").alias("id_hi"),
-        F.col("distance").cast("int").alias("distance"),
-        (F.col("pair_ts").cast("long") - 86400).alias("pair_ts_sec"),
-    ).collect()
-    for p in tmp_dirs:
-        shutil.rmtree(p, ignore_errors=True)
-    return spark.createDataFrame(
-        rows, "id_lo long, id_hi long, distance int, pair_ts_sec long"
+    dirs = tuple(
+        tempfile.mkdtemp(prefix=f"{prefix}_{role}_")
+        for role in ("land", "out", "ckpt")
+    )
+    try:
+        yield dirs
+    finally:
+        for p in dirs:
+            shutil.rmtree(p, ignore_errors=True)
+
+
+def _collect_local(spark, df: DataFrame) -> DataFrame:
+    """df (bounded: a gated replay result) as a driver-local DataFrame, so it
+    no longer reads the scratch dirs _replay_dirs deletes."""
+    return spark.createDataFrame(df.collect(), df.schema)
+
+
+def _drain_replay_sink(spark, out_dir):
+    """A near-pair replay sink mapped back to (id_lo, id_hi, distance,
+    pair_ts_sec), materialized."""
+    return _collect_local(
+        spark,
+        spark.read.parquet(out_dir).select(
+            F.col("url_lo").cast("long").alias("id_lo"),
+            F.col("url_hi").cast("long").alias("id_hi"),
+            F.col("distance").cast("int").alias("distance"),
+            (F.col("pair_ts").cast("long") - 86400).alias("pair_ts_sec"),
+        ),
     )
 
 
@@ -3145,8 +3160,6 @@ def q_stream_exact_dedup_replay(spark, sf_dir):
     recomputes the set exactly. The landing is written as ONE file so the
     replay is a single ordered micro-batch (the rule's arrival-order premise);
     multi-batch equivalence is pinned in tests/test_streaming_exact_dedup.py."""
-    import tempfile
-
     from ..streaming.exact_dedup_stream import stream_exact_dedup
     from ..streaming.ingest_stream import PAGES_SCHEMA
 
@@ -3162,31 +3175,32 @@ def q_stream_exact_dedup_replay(spark, sf_dir):
         "text",
         F.col("lang"),
     )
-    landing = tempfile.mkdtemp(prefix="sed_land_")
-    out_dir = tempfile.mkdtemp(prefix="sed_out_")
-    ckpt = tempfile.mkdtemp(prefix="sed_ckpt_")
-    pages.coalesce(1).write.mode("overwrite").parquet(landing)
-    stream = spark.readStream.schema(PAGES_SCHEMA).parquet(landing)
-    q = (
-        stream_exact_dedup(
-            stream,
-            watermark="48 hours",
-            horizon=f"{NEAR_HORIZON_SEC} seconds",
-            extract=False,
+    with _replay_dirs("sed") as (landing, out_dir, ckpt):
+        pages.coalesce(1).write.mode("overwrite").parquet(landing)
+        stream = spark.readStream.schema(PAGES_SCHEMA).parquet(landing)
+        q = (
+            stream_exact_dedup(
+                stream,
+                watermark="48 hours",
+                horizon=f"{NEAR_HORIZON_SEC} seconds",
+                extract=False,
+            )
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
         )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return spark.read.parquet(out_dir).select(
-        F.col("url").cast("long").alias("doc_id"),
-        "text_hash",
-        (F.col("warc_ts").cast("long") - 86400).alias("ts_sec"),
-    )
+        q.awaitTermination()
+        return _collect_local(
+            spark,
+            spark.read.parquet(out_dir).select(
+                F.col("url").cast("long").alias("doc_id"),
+                "text_hash",
+                (F.col("warc_ts").cast("long") - 86400).alias("ts_sec"),
+            ),
+        )
 
 
 # --- corpus-curation surfaces (round-5 final session) -------------------------
@@ -3408,9 +3422,8 @@ def q_multi_signal_clusters(spark, sf_dir):
     exchange-free; connected components bounded-driver or alternating-star;
     one shuffle-hash join assigns the corpus. Cost is the sum of the legs —
     no leg is recomputed (one signature projection feeds simhash + minhash)."""
-    mh = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
     d = with_text_hash(docs_with_sig(spark, sf_dir)).withColumn(
-        "minhash", mh(F.col("text"))
+        "minhash", _spec_sig().getField("minhash")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     near = banded_self_join(
         d, "doc_id", "simhash", SIMHASH_RADIUS, blacklist=(0,)
@@ -3439,9 +3452,8 @@ def q_dedup_ablation(spark, sf_dir):
     the previous one's edge frames (union is exchange-free), so the total
     cost is the three edge legs + three bounded CC closures — NOT 3x the
     pipeline. Outputs are 3 rows by construction."""
-    mh = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
     d = with_text_hash(docs_with_sig(spark, sf_dir)).withColumn(
-        "minhash", mh(F.col("text"))
+        "minhash", _spec_sig().getField("minhash")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     n_docs = d.count()
     ids = d.select(F.col("doc_id").alias("id"))
@@ -3596,11 +3608,8 @@ def q_simhash_pair_precision(spark, sf_dir):
     shingle sets join ONLY the survivors (two shuffle-hash joins on pair
     ids, the ann_topk discipline); docs without a shingle set (< K_SHINGLE
     tokens) drop from the audit in both engines."""
-    from ..functions.udfs import make_shingle_hashes_udf
-
-    shu = make_shingle_hashes_udf(K_SHINGLE)
     d = docs_with_sig(spark, sf_dir).select(
-        "doc_id", "simhash", shu(F.col("text")).alias("shset")
+        "doc_id", "simhash", _spec_sig().getField("shingle_hashes").alias("shset")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     pairs = banded_self_join(
         d, "doc_id", "simhash", SIMHASH_RADIUS, blacklist=(0,)
@@ -3897,9 +3906,8 @@ def q_signal_agreement(spark, sf_dir):
     shapes (hash-groupBy / banded joins); the union is exchange-free; one
     exchange groups by canonical pair to fold the bitmask; everything
     after is over <= 7 mask rows crossed with 3 literal family rows."""
-    mhu = make_minhash_udf(K_SHINGLE, ORACLE_MINHASH)
     d = with_text_hash(docs_with_sig(spark, sf_dir)).withColumn(
-        "minhash", mhu(F.col("text"))
+        "minhash", _spec_sig().getField("minhash")
     ).persist(StorageLevel.MEMORY_AND_DISK)
     ex = exact_pairs(d, "doc_id", "text_hash").select(
         "id_lo", "id_hi", F.lit(1).alias("m")
@@ -4086,8 +4094,6 @@ def q_stream_embedding_near_dup_replay(spark, sf_dir):
     pigeonhole-exactly the Hamming-radius pairs within the horizon, so
     the DuckDB oracle is brute force over SQL-recomputed hyperplane
     signatures — hash-exact, not recall-statistical."""
-    import tempfile
-
     from ..streaming.near_dedup_stream import stream_embedding_near_pairs
 
     emb = load(spark, sf_dir, "embeddings")
@@ -4098,31 +4104,29 @@ def q_stream_embedding_near_dup_replay(spark, sf_dir):
         F.timestamp_seconds(F.col("vec_id") * 61 + 86400).alias("warc_ts"),
         "embedding",
     )
-    landing = tempfile.mkdtemp(prefix="sev_land_")
-    out_dir = tempfile.mkdtemp(prefix="sev_out_")
-    ckpt = tempfile.mkdtemp(prefix="sev_ckpt_")
-    vecs.write.mode("overwrite").parquet(landing)
-    stream = spark.readStream.schema(
-        "url string, warc_ts timestamp, embedding array<float>"
-    ).parquet(landing)
-    q = (
-        stream_embedding_near_pairs(
-            stream,
-            dim=EMB_DIM,
-            radius=EMB_STREAM_RADIUS,
-            n_bands=EMB_STREAM_BANDS,
-            watermark="48 hours",
-            horizon=f"{NEAR_HORIZON_SEC} seconds",
+    with _replay_dirs("sev") as (landing, out_dir, ckpt):
+        vecs.write.mode("overwrite").parquet(landing)
+        stream = spark.readStream.schema(
+            "url string, warc_ts timestamp, embedding array<float>"
+        ).parquet(landing)
+        q = (
+            stream_embedding_near_pairs(
+                stream,
+                dim=EMB_DIM,
+                radius=EMB_STREAM_RADIUS,
+                n_bands=EMB_STREAM_BANDS,
+                watermark="48 hours",
+                horizon=f"{NEAR_HORIZON_SEC} seconds",
+            )
+            .writeStream.format("parquet")
+            .option("path", out_dir)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
         )
-        .writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    return _drain_replay_sink(spark, out_dir, (landing, out_dir, ckpt))
+        q.awaitTermination()
+        return _drain_replay_sink(spark, out_dir)
 
 
 def q_incremental_embedding_near_pairs(spark, sf_dir):

@@ -203,6 +203,34 @@ class TestSpecVsDuckDB:
                 got = [by_doc[doc_id][i] for i in range(16)]
                 assert got == expect, t
 
+    def test_minhash_shingles_udf_matches_scalar_spec(self, spark):
+        """The one spec shingle-set UDF behind the gated MinHash,
+        shingle-set and fingerprint queries: per row (a None row included)
+        minhash == minhash_sig and shingle_hashes == sorted distinct
+        shingle_hash32, both null without a k-shingle."""
+        from pyspark.sql import functions as F
+
+        from intraarchivededuplicator_spark.functions.udfs import (
+            make_minhash_shingles_udf,
+        )
+
+        p = MinHashParams.make(16)
+        texts = self.TEXTS + [None]
+        df = spark.createDataFrame(
+            list(enumerate(texts)), "doc_id long, text string"
+        )
+        rows = df.select(
+            "doc_id", make_minhash_shingles_udf(5, p)(F.col("text")).alias("sig")
+        ).collect()
+        assert len(rows) == len(texts)
+        for r in rows:
+            t = texts[r.doc_id]
+            want_mh = minhash_sig(t, 5, p) if t is not None else None
+            sh = shingles(tokenize(t), 5) if t is not None else []
+            want_sh = sorted({shingle_hash32(s) for s in sh}) or None
+            assert r.sig.minhash == want_mh, t
+            assert r.sig.shingle_hashes == want_sh, t
+
     def test_shingle_hash_sql(self, con):
         from intraarchivededuplicator_spark.plans.oracle import sql_shingle_hash32
 
@@ -278,14 +306,20 @@ class TestSignaturesBatchKernel:
         implementation, reconstructed here from the module's own shingle-mix
         primitives) on a fuzzed mixed batch — including empty / whitespace /
         non-string docs, so the offset bookkeeping is exercised at every
-        batch position."""
+        batch position. The winnow_w form (five outputs) and the
+        standalone engine shingle-set kernel (shingle_sets_batch, with and
+        without winnowing) are pinned against the same reference: their
+        sets must equal the reference's distinct h32 and their
+        (interior, boundary) must equal winnow_split of its positional h32."""
         import hashlib
 
         from intraarchivededuplicator_spark.functions.hashing import (
             MINHASH_PRIME,
             _shingle_mix,
+            shingle_sets_batch,
             signatures_batch,
             tokenize,
+            winnow_split,
         )
 
         rng = np.random.RandomState(77)
@@ -297,6 +331,14 @@ class TestSignaturesBatchKernel:
         p = MinHashParams.make(k=16, seed=3)
         k_shingle, k_sim = 5, 3
         sim, mh, sh = signatures_batch(texts, k_shingle, p, shingle_k_sim=k_sim)
+        w = 3
+        sim_w, mh_w, sh_w, wint, wbnd = signatures_batch(
+            texts, k_shingle, p, shingle_k_sim=k_sim, winnow_w=w
+        )
+        assert sim_w.tolist() == sim.tolist()
+        assert mh_w == mh and sh_w == sh
+        (set_only,) = shingle_sets_batch(texts, k_shingle)
+        set_w, wint_s, wbnd_s = shingle_sets_batch(texts, k_shingle, w)
 
         a = np.array(p.a, dtype=np.int64)[:, None]
         b = np.array(p.b, dtype=np.int64)[:, None]
@@ -334,5 +376,12 @@ class TestSignaturesBatchKernel:
                 vals = (a * uniq32[None, :] + b) % MINHASH_PRIME
                 assert mh[i] == vals.min(axis=1).tolist(), i
                 assert sh[i] == uniq32.tolist(), i
+                assert set_only[i] == set_w[i] == uniq32.tolist(), i
+                wi, wb = winnow_split(h32, w)
+                assert wint[i] == wint_s[i] == wi.tolist(), i
+                assert wbnd[i] == wbnd_s[i] == wb.tolist(), i
             else:
                 assert mh[i] is None and sh[i] is None, i
+                assert set_only[i] is None and set_w[i] is None, i
+                assert wint[i] is None and wbnd[i] is None, i
+                assert wint_s[i] is None and wbnd_s[i] is None, i

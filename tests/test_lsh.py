@@ -54,6 +54,15 @@ def test_bucket_plan_matches_join_plan(sig_df):
     assert a == b
 
 
+def test_rows_per_band_is_required(sig_df):
+    """The band geometry must come from the caller's signature config: no
+    silent default that could disagree with the signature length."""
+    with pytest.raises(TypeError, match="rows_per_band"):
+        minhash_candidate_pairs(sig_df, n_bands=32)
+    with pytest.raises(TypeError):
+        minhash_candidate_pairs(sig_df, "id", "minhash", 32, 4)
+
+
 def test_hot_cap_matches_reference_filter(sig_df):
     thr = 30
     got = _pairs(

@@ -374,3 +374,63 @@ class TestStreamingEmbeddingNearDedup:
             assert hamming64(
                 sigs[int(r.url_lo)], sigs[int(r.url_hi)]
             ) == r.distance
+
+
+class TestReplayScratchDirs:
+    """The gated streaming replays (plans/queries.q_stream_*_replay) write a
+    landing copy, a sink and a checkpoint to fresh temp dirs; all three must
+    be removed when the replay raises, not only when it returns."""
+
+    @pytest.mark.parametrize(
+        "query, module, operator",
+        [
+            ("q_stream_near_dedup_replay", "near_dedup_stream",
+             "stream_simhash_near_pairs"),
+            ("q_stream_exact_dedup_replay", "exact_dedup_stream",
+             "stream_exact_dedup"),
+            ("q_stream_embedding_near_dup_replay", "near_dedup_stream",
+             "stream_embedding_near_pairs"),
+        ],
+    )
+    def test_dirs_removed_when_replay_raises(
+        self, spark, tmp_path, monkeypatch, query, module, operator
+    ):
+        import importlib
+        import tempfile
+
+        from intraarchivededuplicator_spark.plans import queries
+
+        made: list[str] = []
+        real_mkdtemp = tempfile.mkdtemp
+
+        def mkdtemp(prefix=None):
+            made.append(real_mkdtemp(prefix=prefix, dir=str(tmp_path)))
+            return made[-1]
+
+        def failing_operator(stream, **kw):
+            # analyzes fine; every row raises inside the running query, so
+            # the failure surfaces from awaitTermination()
+            boom = F.raise_error(F.lit("forced replay failure")).cast("long")
+            return stream.select(F.coalesce(boom, F.lit(0)).alias("x"))
+
+        monkeypatch.setattr(tempfile, "mkdtemp", mkdtemp)
+        monkeypatch.setattr(
+            importlib.import_module(
+                f"intraarchivededuplicator_spark.streaming.{module}"
+            ),
+            operator,
+            failing_operator,
+        )
+        sf_dir = tmp_path / "sf"
+        spark.createDataFrame(
+            [(i, _variant(i), "en") for i in range(4)],
+            "doc_id long, text string, lang string",
+        ).write.parquet(str(sf_dir / "documents.parquet"))
+        spark.createDataFrame(
+            [(i, [float(i)] * 64) for i in range(4)],
+            "vec_id long, embedding array<float>",
+        ).write.parquet(str(sf_dir / "embeddings.parquet"))
+        with pytest.raises(Exception, match="forced replay failure"):
+            getattr(queries, query)(spark, str(sf_dir))
+        assert len(made) == 3
+        assert not any(os.path.exists(p) for p in made)
